@@ -16,13 +16,14 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql.types import DateType
 
 from ..functions.kernels import normalize_value, pct_change, volatility
 from ..operators.changelog import Changelog
-from ..operators.merge import merge_upsert
+from ..operators.merge import in_list_sql, merge_upsert
 from ..operators.table_store import TableStore
 from ..sources.noaa_feed import fetch_feed, parse_feed_text
 
@@ -105,22 +106,25 @@ def load_raw(
         parsed = parsed.filter(F.make_date("YEAR", "MONTH", "DAY") > F.lit(wm))
 
     parsed = parsed.cache()
-    # one job yields both the empty-batch gate AND the new watermark (the
-    # same scan that round 3 spent on a bare count)
-    n, max_d = parsed.agg(
-        F.count(F.lit(1)), F.max(F.make_date("YEAR", "MONTH", "DAY"))
-    ).first()
-    if n == 0:
-        return "No new data to load"
+    try:
+        # one job yields both the empty-batch gate AND the new watermark (the
+        # same scan that round 3 spent on a bare count)
+        n, max_d = parsed.agg(
+            F.count(F.lit(1)), F.max(F.make_date("YEAR", "MONTH", "DAY"))
+        ).first()
+        if n == 0:
+            return "No new data to load"
 
-    # ONE physical append lands both RAW and its change record: the
-    # changelog is embedded in the year-partitioned RAW table (S6 partition
-    # pruning intact — YEAR stays the layout key; the stream offset is the
-    # _row_id column, pruned by row-group stats). Round 3 paid two full
-    # write jobs per ingest batch for the same bytes.
-    Changelog(store, RAW_TABLE, embedded=True).append(
-        parsed, action="INSERT", partition_by=["YEAR"]
-    )
+        # ONE physical append lands both RAW and its change record: the
+        # changelog is embedded in the year-partitioned RAW table (S6
+        # partition pruning intact — YEAR stays the layout key; the stream
+        # offset is the _row_id column, pruned by row-group stats). Round 3
+        # paid two full write jobs per ingest batch for the same bytes.
+        Changelog(store, RAW_TABLE, embedded=True).append(
+            parsed, action="INSERT", partition_by=["YEAR"]
+        )
+    finally:
+        parsed.unpersist()
     # watermark sidecar AFTER rows land: a crash in between re-ingests the
     # batch (dates > stale watermark), and the DATE-keyed merges downstream
     # make that replay idempotent (SURVEY §7.3)
@@ -132,7 +136,6 @@ def load_raw(
     with open(tmp, "w") as f:
         f.write(wm_new.isoformat())
     os.replace(tmp, wf)
-    parsed.unpersist()
     return f"Loaded {n} new rows"
 
 
@@ -150,58 +153,60 @@ def harmonize(spark: SparkSession, store: TableStore, consumer: str = "harmonize
     # one action covers both the SYSTEM$STREAM_HAS_DATA gate and the offset
     # high-water mark (round 1 paid two: a limit(1).count probe + a max agg)
     pending = pending.cache()
-    n_pending, hi = pending.agg(F.count(F.lit(1)), F.max("_row_id")).first()
-    if not n_pending:
+    try:
+        n_pending, hi = pending.agg(F.count(F.lit(1)), F.max("_row_id")).first()
+        if not n_pending:
+            return "No data in stream to process"
+
+        src = (
+            pending.filter(F.col("_action") == "INSERT")  # P8 metadata filter
+            .withColumn("DATE", F.make_date("YEAR", "MONTH", "DAY"))  # P2/P3
+            .select(
+                "DATE",
+                "YEAR",
+                "MONTH",
+                "DAY",
+                "CO2_PPM",
+                F.current_timestamp().alias("META_UPDATED_AT"),  # P6 audit column
+            )
+        )
+
+        # J1: MERGE on DATE (update all cols / insert). The A2 _CO2_MINMAX
+        # scalar-cache refresh (:81-87) rides the merge write as Observation
+        # metrics — the merged result IS the new harmonized table, so
+        # observing min/max during the write replaces the round-1 full
+        # re-read + agg. HARMONIZED and its scalar cache publish in ONE
+        # transaction (staged version dirs + commit journal): a crash
+        # between the two writes can no longer leave analytics normalizing
+        # against stale bounds.
+        from ..session import local_rows_df
+
+        with store.transaction("harmonize") as txn:
+            mres = merge_upsert(
+                spark,
+                store,
+                HARMONIZED_TABLE,
+                src,
+                keys=["DATE"],
+                count_rows=False,
+                observe_metrics={
+                    "MIN_CO2": F.min("CO2_PPM"),
+                    "MAX_CO2": F.max("CO2_PPM"),
+                },
+                txn=txn,
+            )
+            got = mres["observed"]
+            mn, mx = got["MIN_CO2"], got["MAX_CO2"]
+            minmax = local_rows_df(
+                spark,
+                [(None if mn is None else float(mn), None if mx is None else float(mx))],
+                schema="MIN_CO2 double, MAX_CO2 double",
+            )
+            txn.overwrite(minmax, MINMAX_TABLE)
+
+        log.commit(consumer, int(hi))  # offset advances with the consuming merge
+    finally:
         pending.unpersist()
-        return "No data in stream to process"
-
-    src = (
-        pending.filter(F.col("_action") == "INSERT")  # P8 metadata filter
-        .withColumn("DATE", F.make_date("YEAR", "MONTH", "DAY"))  # P2/P3
-        .select(
-            "DATE",
-            "YEAR",
-            "MONTH",
-            "DAY",
-            "CO2_PPM",
-            F.current_timestamp().alias("META_UPDATED_AT"),  # P6 audit column
-        )
-    )
-
-    # J1: MERGE on DATE (update all cols / insert). The A2 _CO2_MINMAX
-    # scalar-cache refresh (:81-87) rides the merge write as Observation
-    # metrics — the merged result IS the new harmonized table, so observing
-    # min/max during the write replaces the round-1 full re-read + agg.
-    # HARMONIZED and its scalar cache publish in ONE transaction (staged
-    # version dirs + commit journal): a crash between the two writes can
-    # no longer leave analytics normalizing against stale bounds.
-    from ..session import local_rows_df
-
-    with store.transaction("harmonize") as txn:
-        mres = merge_upsert(
-            spark,
-            store,
-            HARMONIZED_TABLE,
-            src,
-            keys=["DATE"],
-            count_rows=False,
-            observe_metrics={
-                "MIN_CO2": F.min("CO2_PPM"),
-                "MAX_CO2": F.max("CO2_PPM"),
-            },
-            txn=txn,
-        )
-        got = mres["observed"]
-        mn, mx = got["MIN_CO2"], got["MAX_CO2"]
-        minmax = local_rows_df(
-            spark,
-            [(None if mn is None else float(mn), None if mx is None else float(mx))],
-            schema="MIN_CO2 double, MAX_CO2 double",
-        )
-        txn.overwrite(minmax, MINMAX_TABLE)
-
-    log.commit(consumer, int(hi))  # offset advances with the consuming merge
-    pending.unpersist()
     return "CO2 data harmonization complete"
 
 
@@ -311,6 +316,11 @@ def analytics_weekly(
     return "Weekly analytics complete"
 
 
+def _date_in(col: str, dates) -> Column:
+    """``col IN (dates)`` as one literal predicate (parquet-pushable)."""
+    return F.expr(in_list_sql([col], [DateType()], [(d,) for d in dates]))
+
+
 def analytics_incremental(
     spark: SparkSession, store: TableStore, consumer: str = "analytics"
 ) -> str:
@@ -345,7 +355,7 @@ def analytics_incremental(
     # never run ahead of harmonize: rows it has not merged yet are not in
     # HARMONIZED, and advancing past them would lose their dates forever
     h_off = int(log._read_meta()["offsets"].get("harmonize", -1))
-    pending = pending.filter(F.col("_row_id") <= h_off).cache()
+    pending = pending.filter(F.col("_row_id") <= h_off)
 
     bounds_file = os.path.join(store.table_dir(DAILY_TABLE), "_BOUNDS")
 
@@ -355,88 +365,84 @@ def analytics_incremental(
             _json.dump([mn, mx], f)
         os.replace(tmp, bounds_file)
 
-    try:
-        n_pending, hi = pending.agg(F.count(F.lit(1)), F.max("_row_id")).first()
-        if not n_pending:
-            return "No data in stream to process"
-        mn, mx = _minmax_lits(spark, store)
-        if not (store.exists(DAILY_TABLE) and store.exists(WEEKLY_TABLE)):
-            out = analytics(spark, store)
-            _commit_bounds(mn, mx)
-            log.commit(consumer, int(hi))
-            return f"{out} (full: first run)"
-
-        # NORMALIZED_* columns depend on the GLOBAL bounds: if this batch
-        # moved them since the last analytics pass, every stored row's
-        # normalized value is stale — only a full recompute is correct
-        # (the reference recomputes fully every run for this reason).
-        prev = None
-        if os.path.exists(bounds_file):
-            with open(bounds_file) as f:
-                prev = tuple(_json.load(f))
-        if prev != (mn, mx):
-            out = analytics(spark, store)
-            _commit_bounds(mn, mx)
-            log.commit(consumer, int(hi))
-            return f"{out} (full: bounds moved)"
-
-        batch = pending.filter(F.col("_action") == "INSERT").select(
-            F.make_date("YEAR", "MONTH", "DAY").alias("DATE")
-        )
-        harmonized = store.read(spark, HARMONIZED_TABLE)
-        affected = batch.select("DATE").distinct()
-        # DATE-only neighbor pass: global order over the daily series (one
-        # narrow column; the series is one row per date by construction).
-        # Recompute a date if IT changed or its PREDECESSOR changed (its
-        # lag inputs moved); each recompute date's predecessor row is
-        # pulled as lag input. One job collects the (churn-sized) date
-        # lists to the driver so every downstream filter is an IN-list
-        # literal — pushed into the parquet scans, with no broadcast
-        # exchanges to materialize. A giant backfill (>5000 dates) would
-        # belong on the full path anyway and bounds-moves already route it
-        # there in practice.
-        dates = harmonized.select("DATE")
-        w = W.orderBy("DATE")
-        ndf = dates.select("DATE", F.lag("DATE", 1).over(w).alias("_prev"))
-        aset = F.broadcast(affected.withColumnRenamed("DATE", "_a"))
-        pairs = ndf.join(
-            aset,
-            (F.col("DATE") == F.col("_a")) | (F.col("_prev") == F.col("_a")),
-            "left_semi",
-        ).collect()
-        recompute_dates = [r["DATE"] for r in pairs]
-        need_dates = sorted(
-            {r["DATE"] for r in pairs} | {r["_prev"] for r in pairs if r["_prev"]}
-        )
-        rows = harmonized.filter(F.col("DATE").isin(need_dates))
-        stats = daily_stats_df(rows, mn, mx).filter(
-            F.col("DATE").isin(recompute_dates)
-        )
-        merge_upsert(
-            spark, store, DAILY_TABLE, stats, keys=["DATE"], count_rows=False
-        )
-
-        # weekly: recompute only the touched ISO weeks (no cross-week lag).
-        # Week set derives driver-side from the already-collected recompute
-        # dates (ISO Monday = d - weekday); recompute ⊇ affected, and
-        # re-deriving an untouched week is an idempotent no-op.
-        import datetime as _dt
-
-        weeks = sorted(
-            {d - _dt.timedelta(days=d.weekday()) for d in recompute_dates}
-        )
-        wrows = harmonized.filter(
-            F.date_trunc("week", F.col("DATE")).cast("date").isin(weeks)
-        )
-        wstats = weekly_stats_df(wrows, mn, mx)
-        merge_upsert(
-            spark, store, WEEKLY_TABLE, wstats, keys=["WEEK_START"], count_rows=False
-        )
+    # one scan of the window yields the gate, the offset high-water mark
+    # AND the affected DATE set (churn-sized, collected to the driver)
+    n_pending, hi, affected = pending.agg(
+        F.count(F.lit(1)),
+        F.max("_row_id"),
+        F.collect_set(
+            F.when(F.col("_action") == "INSERT", F.make_date("YEAR", "MONTH", "DAY"))
+        ),
+    ).first()
+    if not n_pending:
+        return "No data in stream to process"
+    mn, mx = _minmax_lits(spark, store)
+    if not (store.exists(DAILY_TABLE) and store.exists(WEEKLY_TABLE)):
+        out = analytics(spark, store)
         _commit_bounds(mn, mx)
         log.commit(consumer, int(hi))
-        return "Daily analytics complete; Weekly analytics complete (incremental)"
-    finally:
-        pending.unpersist()
+        return f"{out} (full: first run)"
+
+    # NORMALIZED_* columns depend on the GLOBAL bounds: if this batch
+    # moved them since the last analytics pass, every stored row's
+    # normalized value is stale — only a full recompute is correct
+    # (the reference recomputes fully every run for this reason).
+    prev = None
+    if os.path.exists(bounds_file):
+        with open(bounds_file) as f:
+            prev = tuple(_json.load(f))
+    if prev != (mn, mx):
+        out = analytics(spark, store)
+        _commit_bounds(mn, mx)
+        log.commit(consumer, int(hi))
+        return f"{out} (full: bounds moved)"
+
+    harmonized = store.read(spark, HARMONIZED_TABLE)
+    # DATE-only neighbor pass: global order over the daily series (one
+    # narrow column; the series is one row per date by construction).
+    # Recompute a date if IT changed or its PREDECESSOR changed (its
+    # lag inputs moved); each recompute date's predecessor row is
+    # pulled as lag input. The affected set is already on the driver,
+    # and one job collects the (churn-sized) date lists, so every
+    # filter is an IN-list literal — pushed into the parquet scans,
+    # with no broadcast exchanges to materialize. A giant backfill
+    # (>5000 dates) would belong on the full path anyway and
+    # bounds-moves already route it there in practice.
+    dates = harmonized.select("DATE")
+    w = W.orderBy("DATE")
+    ndf = dates.select("DATE", F.lag("DATE", 1).over(w).alias("_prev"))
+    pairs = ndf.filter(
+        _date_in("DATE", affected) | _date_in("_prev", affected)
+    ).collect()
+    recompute_dates = [r["DATE"] for r in pairs]
+    need_dates = sorted(
+        {r["DATE"] for r in pairs} | {r["_prev"] for r in pairs if r["_prev"]}
+    )
+    rows = harmonized.filter(_date_in("DATE", need_dates))
+    stats = daily_stats_df(rows, mn, mx).filter(_date_in("DATE", recompute_dates))
+    merge_upsert(
+        spark, store, DAILY_TABLE, stats, keys=["DATE"], count_rows=False
+    )
+
+    # weekly: recompute only the touched ISO weeks (no cross-week lag).
+    # Week set derives driver-side from the already-collected recompute
+    # dates (ISO Monday = d - weekday); recompute ⊇ affected, and
+    # re-deriving an untouched week is an idempotent no-op.
+    import datetime as _dt
+
+    weeks = sorted(
+        {d - _dt.timedelta(days=d.weekday()) for d in recompute_dates}
+    )
+    wrows = harmonized.filter(
+        F.date_trunc("week", F.col("DATE")).cast("date").isin(weeks)
+    )
+    wstats = weekly_stats_df(wrows, mn, mx)
+    merge_upsert(
+        spark, store, WEEKLY_TABLE, wstats, keys=["WEEK_START"], count_rows=False
+    )
+    _commit_bounds(mn, mx)
+    log.commit(consumer, int(hi))
+    return "Daily analytics complete; Weekly analytics complete (incremental)"
 
 
 def analytics(spark: SparkSession, store: TableStore) -> str:

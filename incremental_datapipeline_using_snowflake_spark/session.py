@@ -95,14 +95,20 @@ def get_session(
 def local_rows_df(spark: SparkSession, rows: list, schema: str):
     """Single-partition DataFrame from a handful of driver-side rows.
 
-    ``spark.createDataFrame(rows)`` parallelizes over default parallelism
-    (32 Python-RDD slices here), and a later ``coalesce(1)`` folds those
-    into ONE task that pays a Python-worker roundtrip PER SLICE — ~4 s of
-    pure fixed overhead per action on local[32], measured. Parallelizing
-    with ``numSlices=1`` up front makes every downstream action exactly one
-    roundtrip (~0.3 s). Use for metadata-sized writes (scalar caches, run
-    logs) — never for real data.
+    The rows become an Arrow table and then a local frame (a
+    ``LocalRelation``): the data travels inside the plan, so no Python
+    worker runs when it is read. ``spark.createDataFrame(rows)`` would ship
+    them through a Python RDD instead, one worker roundtrip per slice
+    (~0.3 s each). The frame is coalesced to ONE partition, so a write of
+    it is one task and one file. Use for metadata-sized writes (scalar
+    caches, run logs) and single documents — never for real data.
     """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema=schema
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
     )
+    return spark.createDataFrame(table, schema=struct).coalesce(1)

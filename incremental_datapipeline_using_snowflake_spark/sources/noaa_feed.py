@@ -82,20 +82,19 @@ def parse_feed_text(spark: SparkSession, text: str) -> DataFrame:
     Falls back to regex extraction when the line parser yields < 10 rows,
     mirroring ``loading_data_sp/function.py:124-145``.
     """
-    # One slice from the start: the feed is a single driver-side document
-    # (~18k rows for 50 years of daily data) — spreading it over default
-    # parallelism multiplies task-launch and small-file commit overhead, and
-    # coalesce(1) after the fact would serialize 32 Python-worker roundtrips
-    # into one task. The at-scale path (parse_feed_path over landed files)
-    # keeps natural partitioning.
-    rdd = spark.sparkContext.parallelize([(ln,) for ln in text.splitlines()], 1)
-    lines = spark.createDataFrame(rdd, schema="value string")
+    # The feed is a single driver-side document (~18k rows for 50 years of
+    # daily data): it becomes a one-partition local frame (no Python worker
+    # runs), so the RAW append writes one file per YEAR. The at-scale path
+    # (parse_feed_path over landed files) keeps natural partitioning.
+    from ..session import local_rows_df
+
+    lines = local_rows_df(spark, [(ln,) for ln in text.splitlines()], "value string")
     parsed = parse_feed_lines(lines)
     # Fallback gate decided driver-side: the feed IS a local document, so a
     # quick Python scan for whitespace-format lines (>=5 tokens, numeric
     # year) replaces the two Spark count() probe jobs the gate cost before.
     # Approximate is fine — it only chooses WHICH Spark parse runs; the
-    # parses themselves stay distributed and exact.
+    # parses themselves stay exact.
     n_ws = 0
     for ln in text.splitlines():
         t = ln.split()

@@ -151,7 +151,7 @@ def stream_harmonize(
                 F.current_timestamp().alias("META_UPDATED_AT"),
             )
         )
-        merge_upsert(spark, store, harmonized_table, src, keys=["DATE"])
+        merge_upsert(spark, store, harmonized_table, src, keys=["DATE"], count_rows=False)
         merged_rows += int(n)
         running_hi = max(running_hi, int(hi))
 

@@ -229,14 +229,17 @@ def test_csv_sink_roundtrip(spark, tmp_path):
 
 
 def test_local_rows_df_single_partition(spark):
-    """Metadata-sized local rows must land in ONE slice: coalesce(1) over a
-    default-parallelism Python RDD serializes a worker roundtrip per slice
-    (~4-5s of fixed overhead per action on local[32], measured round 3)."""
+    """Metadata-sized local rows land in ONE partition of an Arrow local
+    frame: the rows travel inside the plan (a LocalRelation), so reading
+    them starts no Python worker, and a write of them is one task, one
+    file."""
     from incremental_datapipeline_using_snowflake_spark.session import local_rows_df
 
     df = local_rows_df(spark, [("a", 1.0), ("b", 2.0)], "k string, v double")
     assert df.rdd.getNumPartitions() == 1
     assert df.count() == 2
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
 def test_overwrite_crash_recovery(spark, tmp_path):

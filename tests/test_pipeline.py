@@ -255,3 +255,52 @@ def test_incremental_analytics_never_outruns_harmonize(spark, store):
     assert "complete" in msg
     # 12 dates: the bad_value row keeps its DATE with NULL CO2
     assert store.read(spark, P.DAILY_TABLE).count() == 12
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_stages_release_cached_frames(spark, store, monkeypatch):
+    """load_raw caches the parsed feed and harmonize its pending window;
+    both must release the cache on every exit: the empty-night early
+    return and a merge that raises included."""
+    bootstrap(store)
+    orch = Orchestrator(spark, store)
+    orch.run(feed_text=FEED_V1)
+    spark.catalog.clearCache()
+
+    res = orch.run(feed_text=FEED_V1)  # empty night
+    assert res["raw"] == "No new data to load"
+    assert _cache_empty(spark)
+
+    def failing_merge(*_args, **_kwargs):
+        raise RuntimeError("forced merge failure")
+
+    monkeypatch.setattr(P, "merge_upsert", failing_merge)
+    res = orch.run(feed_text=FEED_V1B)
+    assert res["harmonized"] == "forced merge failure"
+    assert orch.task_history()[-1]["status"] == "FAILED"
+    assert _cache_empty(spark)
+
+
+# Spark jobs one incremental night (FEED_V1 -> FEED_V1B) runs, as measured
+# (the count repeats exactly). A change that re-adds per-merge or per-stage
+# jobs fails here.
+NIGHT_JOB_BUDGET = 26
+
+
+def test_incremental_night_job_budget(spark, store):
+    bootstrap(store)
+    orch = Orchestrator(spark, store)
+    orch.run(feed_text=FEED_V1)
+    sc = spark.sparkContext
+    group = "job-budget-night"
+    sc.setJobGroup(group, "one incremental night")
+    try:
+        res = orch.run(feed_text=FEED_V1B)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["analytics"].endswith("(incremental)")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= NIGHT_JOB_BUDGET, n_jobs

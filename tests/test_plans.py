@@ -82,13 +82,14 @@ def test_merge_upsert_broadcasts_source(spark, store):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def _broadcast_subtrees(simple_plan: str) -> list[list[str]]:
-    """Each BroadcastExchange node's subtree lines (by indentation depth)."""
+def _exchange_subtrees(simple_plan: str) -> list[list[str]]:
+    """Each exchange node's (shuffle or broadcast) subtree lines, by
+    indentation depth."""
     lines = simple_plan.splitlines()
     depth = lambda ln: len(ln) - len(ln.lstrip(" :+-*"))  # noqa: E731
     out = []
     for i, ln in enumerate(lines):
-        if "BroadcastExchange" in ln:
+        if "Exchange" in ln:
             d = depth(ln)
             sub = [ln]
             for nxt in lines[i + 1 :]:
@@ -100,12 +101,13 @@ def _broadcast_subtrees(simple_plan: str) -> list[list[str]]:
 
 
 def test_merge_never_broadcasts_or_shuffles_target(spark, store):
-    """100 TB discipline: every broadcast exchange in the merge plan must
-    build from the (small) source side — never from the target table's
-    parquet scan — and nothing may fall back to sort-merge."""
+    """100 TB discipline: the merge plan never puts the target table's
+    parquet scan under an exchange (shuffle or broadcast), nothing falls
+    back to sort-merge, and the source key set reaches the target scan as a
+    pushed-down literal predicate."""
     from pyspark.sql import functions as F
 
-    from incremental_datapipeline_using_snowflake_spark.operators.merge import merge_branches
+    from incremental_datapipeline_using_snowflake_spark.operators.merge import merge_plan
 
     target = spark.range(0, 10000).select(
         F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
@@ -114,28 +116,26 @@ def test_merge_never_broadcasts_or_shuffles_target(spark, store):
     src = spark.createDataFrame(
         [(5, 9.9), (10_500, 1.1)], schema="k long, v double"
     )
-    _, _, result = merge_branches(store.read(spark, "ns.audit_big"), src, keys=["k"])
+    result, n_upd, n_ins = merge_plan(
+        spark, store.read(spark, "ns.audit_big"), src, keys=["k"]
+    )
     plan = result._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
     assert "SortMergeJoin" not in plan
-    subtrees = _broadcast_subtrees(plan)
-    assert subtrees, "expected broadcast joins in the merge plan"
-    for sub in subtrees:
-        # a parquet scan of the target under a BroadcastExchange is the
-        # round-1 scale-killer this guards against; the matched-keys
-        # broadcast joins target rows to broadcast-src first, so any scan
-        # under an exchange must itself sit under a nested (source-built)
-        # broadcast join
+    for sub in _exchange_subtrees(plan):
         scans = [ln for ln in sub if "FileScan parquet" in ln or "Scan parquet" in ln]
-        if scans:
-            assert any("BroadcastHashJoin" in ln for ln in sub[1:]), (
-                "target parquet scan broadcast directly:\n" + "\n".join(sub)
-            )
+        assert not scans, "target parquet scan under an exchange:\n" + "\n".join(sub)
+    # the key-set predicate is pushed into the (only) target scan
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 1
+    assert "PushedFilters: [Or(Not(In(k, [10500,5]))" in scans[0], scans[0]
 
     # semantics unchanged: 1 update + 1 insert
+    assert (n_upd, n_ins) == (1, 1)
     rows = {r["k"]: r["v"] for r in result.collect()}
     assert len(rows) == 10001 and rows[5] == 9.9 and rows[10_500] == 1.1
+
 
 
 def test_inventory_plan_invariants(spark, sf_dir):

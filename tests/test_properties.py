@@ -100,6 +100,131 @@ def test_upsert_idempotent_and_unique_keys(sp, target, source):
     assert len(a) == once.count()  # keys unique in the result
 
 
+
+# ---------------------------------------------------------------------------
+# store-level merge_upsert (the collected-source plan the pipeline runs):
+# NULL keys, duplicate source keys, an update_cols subset, txn staging,
+# observe_metrics and the returned counts, against a dict model.
+# ---------------------------------------------------------------------------
+MERGE_ROW = st.tuples(
+    st.one_of(st.none(), st.integers(min_value=0, max_value=12)),
+    VALS,
+    st.sampled_from(["a", "b", "c"]),
+)
+MERGE_SCHEMA = "k long, v long, w string"
+
+
+def _merge_model(target, source, update_cols):
+    """-> (acceptable rows per key, NULL-keyed rows kept, acceptable
+    NULL-keyed inserted row or None, updated, inserted).
+
+    The source is deduplicated per key with an arbitrary survivor, so each
+    key maps to the SET of rows the merge may produce for it. SQL NULL keys
+    never match: NULL-keyed target rows stay, and the NULL-keyed source rows
+    collapse into one inserted row."""
+    by_key = {k: {(k, v, w)} for k, v, w in target if k is not None}
+    null_rows = [r for r in target if r[0] is None]
+    null_insert = None
+    src: dict = {}
+    for r in source:
+        src.setdefault(r[0], []).append(r)
+    updated = inserted = 0
+    for k, cands in src.items():
+        if k is not None and k in by_key:
+            updated += 1
+            (_, _, tw), = by_key[k]
+            by_key[k] = {(k, v, tw if update_cols else w) for _, v, w in cands}
+            continue
+        inserted += 1
+        # the default insert set is keys + update set: w is NULL when only
+        # v is updated
+        imgs = {(k, v, None if update_cols else w) for _, v, w in cands}
+        if k is None:
+            null_insert = imgs
+        else:
+            by_key[k] = imgs
+    return by_key, null_rows, null_insert, updated, inserted
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    target=st.lists(MERGE_ROW, max_size=15),
+    source=st.lists(MERGE_ROW, max_size=15),
+    update_cols=st.sampled_from([None, ["v"]]),
+    use_txn=st.booleans(),
+    broadcast_source=st.booleans(),
+)
+def test_merge_upsert_matches_dict_model(
+    sp, store, target, source, update_cols, use_txn, broadcast_source
+):
+    # the target is a keyed table: unique non-NULL keys, any number of NULLs
+    seen: set = set()
+    target = [r for r in target if r[0] is None or not (r[0] in seen or seen.add(r[0]))]
+    from pyspark.sql import functions as F
+
+    from incremental_datapipeline_using_snowflake_spark.operators import merge_upsert
+
+    def df(rows_):
+        return sp.createDataFrame(rows_ or [(0, 0, "")], MERGE_SCHEMA).limit(len(rows_))
+
+    store.overwrite(df(target), "ns.mprop")
+    kwargs = dict(
+        keys=["k"],
+        update_cols=update_cols,
+        broadcast_source=broadcast_source,
+        observe_metrics={"n": F.count(F.lit(1)), "sv": F.sum("v")},
+    )
+    if use_txn:
+        with store.transaction("prop") as txn:
+            res = merge_upsert(sp, store, "ns.mprop", df(source), txn=txn, **kwargs)
+    else:
+        res = merge_upsert(sp, store, "ns.mprop", df(source), **kwargs)
+
+    by_key, null_rows, null_insert, updated, inserted = _merge_model(
+        target, source, update_cols
+    )
+    got = [tuple(r) for r in store.read(sp, "ns.mprop").collect()]
+    got_keyed = {r[0]: r for r in got if r[0] is not None}
+    assert len(got_keyed) == len([r for r in got if r[0] is not None])  # unique
+    assert set(got_keyed) == set(by_key)
+    for k, r in got_keyed.items():
+        assert r in by_key[k], (k, r, by_key[k])
+    got_nulls = [r for r in got if r[0] is None]
+    for r in null_rows:
+        got_nulls.remove(r)
+    assert len(got_nulls) == (null_insert is not None)
+    assert all(r in null_insert for r in got_nulls)
+    assert (res["updated"], res["inserted"]) == (updated, inserted)
+    assert res["observed"]["n"] == len(got)
+    assert res["observed"]["sv"] == (sum(r[1] for r in got) if got else None)
+
+
+def test_merge_upsert_full_recompute_shape_matches_upsert_dataframe(spark, store):
+    """A full-recompute night: every one of ~4k DATE keys matched plus a
+    few inserted, in one merge (the key set becomes one IN-list literal)."""
+    from pyspark.sql import functions as F
+
+    from incremental_datapipeline_using_snowflake_spark.operators import merge_upsert
+
+    def series(n, scale):
+        return spark.range(n).select(
+            F.date_add(F.lit("2010-01-01").cast("date"), F.col("id").cast("int")).alias("DATE"),
+            (F.col("id") * scale).alias("V"),
+            F.lit(f"s{scale}").alias("TAG"),
+        )
+
+    target, source = series(4000, 1.0), series(4010, 2.0)
+    store.overwrite(target, "ns.full")
+    expected = sorted(
+        tuple(r)
+        for r in upsert_dataframe(store.read(spark, "ns.full"), source, keys=["DATE"]).collect()
+    )
+    res = merge_upsert(spark, store, "ns.full", source, keys=["DATE"])
+    assert (res["updated"], res["inserted"]) == (4000, 10)
+    got = sorted(tuple(r) for r in store.read(spark, "ns.full").collect())
+    assert got == expected and len(got) == 4010
+
+
 # ---------------------------------------------------------------------------
 # connected components: randomized graphs vs a union-find model — the other
 # custom iterative operator gets the dict-model treatment too.
